@@ -9,6 +9,7 @@ import graft.functions.{hashfns, textfns}
 import graft.multimodal.Multimodal
 import graft.operators.{Bpe, Decontam, Freq, Layout, Search, Shuffle}
 import graft.similarity.Ann
+import graft.sources.Tables
 import graft.streaming.Streams
 
 /** Driver contract — see /root/repo/SURVEY.md §2 (query keys) + §7.
@@ -27,7 +28,7 @@ import graft.streaming.Streams
 object SparkEntry {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Tables.load(s, dir, name)
 
   private def g(s: SparkSession, dir: String, name: String): GraftFrame =
     GraftFrame(t(s, dir, name))
@@ -61,10 +62,10 @@ object SparkEntry {
           rm(new java.io.File(
             s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), tbl))
         }
-        graft.sources.Tables.writeBucketed(
+        Tables.writeBucketed(
           t(s, dir, "lineitem").select(col("l_orderkey"), col("l_quantity")),
           Q45LineitemTable, "l_orderkey", 16)
-        graft.sources.Tables.writeBucketed(
+        Tables.writeBucketed(
           t(s, dir, "orders").select(col("o_orderkey").as("l_orderkey"),
             col("o_totalprice")),
           Q45OrdersTable, "l_orderkey", 16)
@@ -96,7 +97,7 @@ object SparkEntry {
     * Returns the ORC directory. */
   private[graft] def ensureOrcWritten(s: SparkSession, dir: String): String =
     ensureWrittenOnce("graft_q46_orc", dir) { path =>
-      graft.sources.Tables.writeOrc(
+      Tables.writeOrc(
         t(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity")),
         path)
@@ -106,7 +107,7 @@ object SparkEntry {
     * dir) — the q48 setup. Returns the partitioned directory. */
   private[graft] def ensurePartitionedWritten(s: SparkSession, dir: String): String =
     ensureWrittenOnce("graft_q48_part", dir) { path =>
-      graft.sources.Tables.writePartitioned(
+      Tables.writePartitioned(
         t(s, dir, "lineitem")
           .select(col("l_returnflag"), col("l_linestatus"),
             col("l_quantity"), col("l_extendedprice")),
@@ -755,7 +756,7 @@ object SparkEntry {
       // ORC PushedFilters), aggregated. Oracle replays the same
       // pipeline from the original parquet — values must survive the
       // typed round-trip bit-exactly.
-      graft.sources.Tables.orc(s, ensureOrcWritten(s, dir))
+      Tables.orc(s, ensureOrcWritten(s, dir))
         .filter(col("l_quantity") >= 30)
         .groupBy("l_returnflag")
         .agg(sum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
@@ -772,7 +773,7 @@ object SparkEntry {
       // partitioned corpora. Oracle replays from the original parquet:
       // values must survive the partitioned round-trip exactly
       // (sum(l_quantity) is integer-valued; min/max are order-free).
-      s.read.parquet(ensurePartitionedWritten(s, dir))
+      Tables.parquet(s, ensurePartitionedWritten(s, dir))
         .filter(col("l_returnflag") === "R")
         .groupBy("l_linestatus")
         .agg(sum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"),
@@ -788,7 +789,7 @@ object SparkEntry {
       // token-statistics pipeline — the standard raw-corpus entry
       // path. Oracle = txt1's replay from the parquet table: the text
       // must survive the round-trip byte-for-byte.
-      val lines = graft.sources.Tables.text(s, ensureTextWritten(s, dir))
+      val lines = Tables.text(s, ensureTextWritten(s, dir))
       val tabAt = instr(col("value"), "\t")
       val parsed = lines.select(
         substring_index(col("value"), "\t", 1).cast("long").as("doc_id"),
@@ -1993,7 +1994,7 @@ object SparkEntry {
       val tmp = java.nio.file.Files.createTempDirectory("graft_dd14")
       Dedup.buildSignatureIndex(ref, "doc_id", "text", shingleN = 7, k = 32)
         .write.mode("overwrite").parquet(s"$tmp/ref_index")
-      val index = s.read.parquet(s"$tmp/ref_index")
+      val index = Tables.parquet(s, s"$tmp/ref_index")
       Dedup.crossDedupWithIndex(d, index, "doc_id", "text",
           shingleN = 7, k = 32, bands = 8, threshold = 1.0,
           spanning = true)
@@ -2345,7 +2346,7 @@ object SparkEntry {
       val tmp = java.nio.file.Files.createTempDirectory("graft_txt21")
       Search.invertedIndex(d, "doc_id", "text")
         .write.mode("overwrite").parquet(s"$tmp/index")
-      Search.andSearch(s.read.parquet(s"$tmp/index"),
+      Search.andSearch(Tables.parquet(s, s"$tmp/index"),
           Seq("dup", "spark", "window"))
         .orderBy(col("doc_id").asc)
     }),
@@ -2790,7 +2791,7 @@ object SparkEntry {
       // rewrites exactly. LayoutSpec pins the file-count mechanics
       // (per-directory counts incl. the skewed case, identity-routed
       // exchange); cents-quantized sum keeps the replay exact.
-      s.read.parquet(ensureCompactedWritten(s, dir))
+      Tables.parquet(s, ensureCompactedWritten(s, dir))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           (sum(floor(col("value") * 100.0 + 0.5).cast("long")).cast("double")

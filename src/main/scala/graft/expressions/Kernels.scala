@@ -819,11 +819,12 @@ object Kernels {
     * Lowercasing goes through UTF8String.toLowerCase — the exact code
     * path of Spark's `lower()`, which the composed formulation this
     * kernel replaces (and the window-TEXT oracle replay the span
-    * consumers group on) uses. Neither a bare `String.toLowerCase`
-    * (JVM default locale) nor `Locale.ROOT` matches it for every
-    * non-ASCII string (e.g. U+0130 İ expands to "i"+combining-dot
-    * under the java.lang.String 1:N mapping), and kernel-digest vs
-    * lower()-text normalizations must agree byte-for-byte — the
+    * consumers group on) uses. Neither a bare `String.toLowerCase` nor
+    * `Locale.ROOT` matches it under a tr/az DEFAULT locale: `lower()`
+    * maps an all-ASCII string byte-wise ('I' → 'i') but sends any other
+    * string through the default-locale `String.toLowerCase`, where 'I'
+    * becomes dotless 'ı' (U+0131). Kernel-digest vs lower()-text
+    * normalizations must agree byte-for-byte — the
     * [[graft.operators.Bpe.encode]] discipline. */
   def windowDigestPairs(s: UTF8String, w: Int): ArrayData = {
     val text = s.toLowerCase.toString

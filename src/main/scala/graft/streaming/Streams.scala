@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Event-time analytics over the `events` table, batch + streaming.
   *
@@ -149,14 +150,14 @@ object Streams {
   def sessionWindowStreamOnce(spark: SparkSession, sourcePath: String,
                               gapMinutes: Int = 30): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val schema = spark.read.parquet(sourcePath).schema
-    val inputPath = asStreamDir(sourcePath)
+    val schema = Tables.parquet(spark, sourcePath).schema
     val qn = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val src = spark.readStream.schema(schema).parquet(inputPath)
     withBackfillStatePartitions(spark) {
-      runGate(sessionWindowAgg(src, gapMinutes)
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").trigger(Trigger.AvailableNow()))(_.awaitTermination())
+      runGate(spark, sourcePath) { in =>
+        sessionWindowAgg(spark.readStream.schema(schema).parquet(in), gapMinutes)
+          .writeStream.format("memory").queryName(qn)
+          .outputMode("complete").trigger(Trigger.AvailableNow())
+      }(_.awaitTermination())
     }
     detachedTable(spark, qn)
   }
@@ -258,18 +259,14 @@ object Streams {
   def tumblingAggStreamOnce(spark: SparkSession, sourcePath: String,
                             windowLen: String = "1 hour"): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val schema = spark.read.parquet(sourcePath).schema
-    // The file streaming source monitors a DIRECTORY. Production
-    // passes one; when handed a single parquet FILE (the test fixture
-    // layout) wrap it in a temp dir via symlink so the source has a
-    // valid basePath.
-    val inputPath = asStreamDir(sourcePath)
+    val schema = Tables.parquet(spark, sourcePath).schema
     val qn = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val src = spark.readStream.schema(schema).parquet(inputPath)
     withBackfillStatePartitions(spark) {
-      runGate(tumblingAgg(src, windowLen)
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").trigger(Trigger.AvailableNow()))(_.awaitTermination())
+      runGate(spark, sourcePath) { in =>
+        tumblingAgg(spark.readStream.schema(schema).parquet(in), windowLen)
+          .writeStream.format("memory").queryName(qn)
+          .outputMode("complete").trigger(Trigger.AvailableNow())
+      }(_.awaitTermination())
     }
     detachedTable(spark, qn)
   }
@@ -285,14 +282,14 @@ object Streams {
                            windowLen: String = "1 hour",
                            slide: String = "15 minutes"): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val schema = spark.read.parquet(sourcePath).schema
-    val inputPath = asStreamDir(sourcePath)
+    val schema = Tables.parquet(spark, sourcePath).schema
     val qn = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val src = spark.readStream.schema(schema).parquet(inputPath)
     withBackfillStatePartitions(spark) {
-      runGate(hoppingAgg(src, windowLen, slide)
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").trigger(Trigger.AvailableNow()))(_.awaitTermination())
+      runGate(spark, sourcePath) { in =>
+        hoppingAgg(spark.readStream.schema(schema).parquet(in), windowLen, slide)
+          .writeStream.format("memory").queryName(qn)
+          .outputMode("complete").trigger(Trigger.AvailableNow())
+      }(_.awaitTermination())
     }
     detachedTable(spark, qn)
   }
@@ -317,19 +314,20 @@ object Streams {
                            dim: DataFrame, joinKey: String,
                            dimCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val schema = spark.read.parquet(sourcePath).schema
-    val inputPath = asStreamDir(sourcePath)
+    val schema = Tables.parquet(spark, sourcePath).schema
     val qn = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val src = spark.readStream.schema(schema).parquet(inputPath)
     val aggs = count(lit(1)).as("n_events") +:
       round(sum(col("value")), 4).as("sum_value") +:
       dimCols.map(c => max(col(c)).as(c))
-    val joined = src.join(broadcast(dim), Seq(joinKey))
-      .groupBy(col(joinKey))
-      .agg(aggs.head, aggs.tail: _*)
     withBackfillStatePartitions(spark) {
-      runGate(joined.writeStream.format("memory").queryName(qn)
-        .outputMode("complete").trigger(Trigger.AvailableNow()))(_.awaitTermination())
+      runGate(spark, sourcePath) { in =>
+        spark.readStream.schema(schema).parquet(in)
+          .join(broadcast(dim), Seq(joinKey))
+          .groupBy(col(joinKey))
+          .agg(aggs.head, aggs.tail: _*)
+          .writeStream.format("memory").queryName(qn)
+          .outputMode("complete").trigger(Trigger.AvailableNow())
+      }(_.awaitTermination())
     }
     detachedTable(spark, qn)
   }
@@ -360,10 +358,9 @@ object Streams {
                              withinMinutes: Int = 30,
                              watermark: String = "2 hours"): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val schema = spark.read.parquet(sourcePath).schema
-    val inputPath = asStreamDir(sourcePath)
-    def side(tp: String, p: String): DataFrame = {
-      val raw = spark.readStream.schema(schema).parquet(inputPath)
+    val schema = Tables.parquet(spark, sourcePath).schema
+    def side(in: String, tp: String, p: String): DataFrame = {
+      val raw = spark.readStream.schema(schema).parquet(in)
       raw
         // a null event time can't satisfy the range predicate (batch
         // semantics) but would reach the watermark operator — drop it
@@ -375,18 +372,19 @@ object Streams {
           col("value").as(s"${p}_value"))
         .withWatermark(s"${p}_ts", watermark)
     }
-    val joined = side(leftType, "l").join(side(rightType, "r"),
-      col("l_user") === col("r_user") &&
-        col("r_ts") >= col("l_ts") &&
-        col("r_ts") <= col("l_ts") + expr(s"INTERVAL $withinMinutes MINUTES"))
-    val out = joined.select(
-      col("l_user").as("user_id"),
-      col("l_id").as("left_id"), col("r_id").as("right_id"),
-      (unix_millis(col("r_ts")) - unix_millis(col("l_ts"))).as("delta_ms"),
-      col("l_value").as("left_value"), col("r_value").as("right_value"))
+    def out(in: String): DataFrame =
+      side(in, leftType, "l").join(side(in, rightType, "r"),
+        col("l_user") === col("r_user") &&
+          col("r_ts") >= col("l_ts") &&
+          col("r_ts") <= col("l_ts") + expr(s"INTERVAL $withinMinutes MINUTES"))
+      .select(
+        col("l_user").as("user_id"),
+        col("l_id").as("left_id"), col("r_id").as("right_id"),
+        (unix_millis(col("r_ts")) - unix_millis(col("l_ts"))).as("delta_ms"),
+        col("l_value").as("left_value"), col("r_value").as("right_value"))
     val qn = "graft_ssjoin_" + java.util.UUID.randomUUID().toString.replace("-", "")
     withBackfillStatePartitions(spark) {
-      runGate(out.writeStream.format("memory").queryName(qn)
+      runGate(spark, sourcePath)(out(_).writeStream.format("memory").queryName(qn)
         .outputMode("append").trigger(Trigger.AvailableNow())) { q =>
         q.awaitTermination()
         val plan = org.apache.spark.sql.graftbridge.Bridge
@@ -466,9 +464,13 @@ object Streams {
       }
     }
 
-  /** Start a one-shot gate query with its checkpoint on tmpfs when the
-    * host has one, run `body`, then stop the query and delete the
-    * checkpoint. The engine's temp checkpoint lands under
+  /** Start a one-shot gate query over `sourcePath` with its checkpoint
+    * on tmpfs when the host has one, run `body`, then stop the query and
+    * delete the checkpoint and the gate's input dir ([[gateInputDir]]).
+    * `writer` builds the query from the input directory's path. The
+    * session is explicit: `SparkSession.active` throws on a thread with
+    * no active or default session and can name the wrong master when
+    * several sessions exist. The engine's temp checkpoint lands under
     * java.io.tmpdir on DISK, and every stateful gate pays per-commit
     * file I/O there (state-store delta files; RocksDB SST + changelog
     * uploads — measured 2.77 s → 1.97 s for the ev10 gate on
@@ -478,28 +480,31 @@ object Streams {
     * checkpoint storage — exactly-once recovery lives there. Hosts
     * without a writable /dev/shm fall back to the engine's temp
     * checkpoint unchanged. */
-  private def runGate[T, R](w: org.apache.spark.sql.streaming.DataStreamWriter[T])
+  private def runGate[T, R](spark: SparkSession, sourcePath: String, deliveries: Int = 1)
+                           (writer: String => org.apache.spark.sql.streaming.DataStreamWriter[T])
                            (body: org.apache.spark.sql.streaming.StreamingQuery => R): R = {
-    val master = org.apache.spark.sql.SparkSession.active
-      .sparkContext.master
-    val ckptDir = gateCheckpointDir(master, new java.io.File("/dev/shm"))
-    def rmTree(p: java.nio.file.Path): Unit = {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).toSeq.flatten.foreach(rm)
-        f.delete(); ()
-      }
-      rm(p.toFile)
-    }
-    // start() inside the try: a start-time failure must not leak the
-    // freshly created RAM-backed checkpoint dir
+    val ckptDir = gateCheckpointDir(spark.sparkContext.master, new java.io.File("/dev/shm"))
+    // input dir and start() inside the try: a failure there must not
+    // leak the freshly created temp dirs
+    var inputDir: Option[java.nio.file.Path] = None
     var q: org.apache.spark.sql.streaming.StreamingQuery = null
     try {
+      inputDir = gateInputDir(sourcePath, deliveries)
+      val w = writer(inputDir.fold(sourcePath)(_.toString))
       q = ckptDir.fold(w)(p => w.option("checkpointLocation", p.toString)).start()
       body(q)
     } finally {
       if (q != null && q.isActive) q.stop()
-      ckptDir.foreach(rmTree)
+      (ckptDir ++ inputDir).foreach(rmTree)
     }
+  }
+
+  /** Delete a tree without following symlinks: a gate's input dir
+    * holds links to the caller's source file, which must survive. */
+  private def rmTree(p: java.nio.file.Path): Unit = {
+    if (java.nio.file.Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS))
+      Option(p.toFile.listFiles).toSeq.flatten.foreach(f => rmTree(f.toPath))
+    p.toFile.delete(); ()
   }
 
   /** Where a ONE-SHOT gate's checkpoint goes: tmpfs when that is sound,
@@ -527,18 +532,24 @@ object Streams {
       Some(java.nio.file.Files.createTempDirectory(shm.toPath, "graft_ckpt_"))
     else None
 
-  /** Wrap a single parquet FILE in a temp dir (symlink) so the file
-    * streaming source — which monitors a DIRECTORY — has a valid
-    * basePath; directories pass through. */
-  private def asStreamDir(sourcePath: String): String = {
+  /** The file streaming source monitors a DIRECTORY. Production
+    * passes one, which is used as is (None). A single parquet FILE (the
+    * test fixture layout) is wrapped in a temp dir holding `deliveries`
+    * symlinks to it, so the source has a valid basePath; two links
+    * simulate an at-least-once source that delivers every record twice,
+    * with no write job. [[runGate]] deletes the dir when the gate ends. */
+  private def gateInputDir(sourcePath: String,
+                           deliveries: Int): Option[java.nio.file.Path] = {
     val srcFile = new java.io.File(sourcePath)
-    if (srcFile.isFile) {
+    if (!srcFile.isFile) None
+    else {
       val d = java.nio.file.Files.createTempDirectory("graft_stream_src")
-      val link = java.nio.file.Files.createSymbolicLink(
-        d.resolve(srcFile.getName), srcFile.toPath.toAbsolutePath)
-      link.toFile.deleteOnExit(); d.toFile.deleteOnExit()
-      d.toString
-    } else sourcePath
+      try (1 to deliveries).foreach { i =>
+        java.nio.file.Files.createSymbolicLink(
+          d.resolve(s"delivery$i.parquet"), srcFile.toPath.toAbsolutePath)
+      } catch { case e: Throwable => rmTree(d); throw e }
+      Some(d)
+    }
   }
 
   /** Detach a completed memory-sink query's result from the session
@@ -622,16 +633,17 @@ object Streams {
   def sessionizeStatefulOnce(spark: SparkSession, sourcePath: String,
                              gapMinutes: Int = 30): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val schema = spark.read.parquet(sourcePath).schema
-    val inputPath = asStreamDir(sourcePath)
-    val raw = spark.readStream.schema(schema).parquet(inputPath)
-    val ev = raw.select(col("user_id"), col("event_id"),
-      eventTsMs(raw, "ts").as("ts_ms"), col("value"))
+    val schema = Tables.parquet(spark, sourcePath).schema
     val qn = "graft_sessions_" + java.util.UUID.randomUUID().toString.replace("-", "")
     withBackfillStatePartitions(spark) {
-      runGate(sessionizeStatefulDs(ev, gapMinutes)
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append").trigger(Trigger.AvailableNow()))(_.awaitTermination())
+      runGate(spark, sourcePath) { in =>
+        val raw = spark.readStream.schema(schema).parquet(in)
+        val ev = raw.select(col("user_id"), col("event_id"),
+          eventTsMs(raw, "ts").as("ts_ms"), col("value"))
+        sessionizeStatefulDs(ev, gapMinutes)
+          .writeStream.format("memory").queryName(qn)
+          .outputMode("append").trigger(Trigger.AvailableNow())
+      }(_.awaitTermination())
     }
     detachedTable(spark, qn)
   }
@@ -682,28 +694,29 @@ object Streams {
     import org.apache.spark.sql.streaming.Trigger
     require(minFraction > 0.0 && minFraction <= 1.0,
       s"trendingStreamOnce: minFraction must be in (0,1], got $minFraction")
-    val schema = spark.read.parquet(sourcePath).schema
-    val inputPath = asStreamDir(sourcePath)
+    val schema = Tables.parquet(spark, sourcePath).schema
     val qn = "graft_trending_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val raw = spark.readStream.schema(schema).parquet(inputPath)
-    val src = raw.withColumn("__evt", eventTs(raw, "ts"))
-      .withWatermark("__evt", watermark)
-    val counts = src
-      .groupBy(window(col("__evt"), windowLen).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    val perWindow = counts
-      .groupBy(window(window_time(col("w")), windowLen).as("w2"))
-      .agg(sum(col("n")).as("window_total"),
-        collect_list(struct(col("event_type"), col("n"))).as("types"))
-    val out = perWindow
-      .select(unix_timestamp(col("w2.start")).as("window_start"),
-        col("window_total"), explode(col("types")).as("t"))
-      .filter(col("t.n") >=
-        ceil(col("window_total") * lit(java.math.BigDecimal.valueOf(minFraction))))
-      .select(col("window_start"), col("t.event_type").as("event_type"),
-        col("t.n").as("n_events"), col("window_total"))
+    def out(in: String): DataFrame = {
+      val raw = spark.readStream.schema(schema).parquet(in)
+      val src = raw.withColumn("__evt", eventTs(raw, "ts"))
+        .withWatermark("__evt", watermark)
+      val counts = src
+        .groupBy(window(col("__evt"), windowLen).as("w"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+      val perWindow = counts
+        .groupBy(window(window_time(col("w")), windowLen).as("w2"))
+        .agg(sum(col("n")).as("window_total"),
+          collect_list(struct(col("event_type"), col("n"))).as("types"))
+      perWindow
+        .select(unix_timestamp(col("w2.start")).as("window_start"),
+          col("window_total"), explode(col("types")).as("t"))
+        .filter(col("t.n") >=
+          ceil(col("window_total") * lit(java.math.BigDecimal.valueOf(minFraction))))
+        .select(col("window_start"), col("t.event_type").as("event_type"),
+          col("t.n").as("n_events"), col("window_total"))
+    }
     withBackfillStatePartitions(spark) {
-      runGate(out.writeStream.format("memory").queryName(qn)
+      runGate(spark, sourcePath)(out(_).writeStream.format("memory").queryName(qn)
         .outputMode("append").trigger(Trigger.AvailableNow())) { q =>
         q.awaitTermination()
         val plan = org.apache.spark.sql.graftbridge.Bridge
@@ -763,58 +776,59 @@ object Streams {
     val nbOther = baseCounts.map(_._2).sum - kept.map(_._2).sum
     val tb = baseCounts.map(_._2).sum
 
-    val schema = spark.read.parquet(sourcePath).schema
-    val inputPath = asStreamDir(sourcePath)
+    val schema = Tables.parquet(spark, sourcePath).schema
     val qn = "graft_drift_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val raw = spark.readStream.schema(schema).parquet(inputPath)
-    val src = raw.withColumn("__evt", eventTs(raw, "ts"))
-      .withWatermark("__evt", watermark)
-      .filter(col(catCol).isNotNull)
-    val counts = src
-      .groupBy(window(col("__evt"), windowLen).as("w"),
-        col(catCol).cast("string").as("__cat"))
-      .agg(count(lit(1)).as("n"))
-    val perWindow = counts
-      .groupBy(window(window_time(col("w")), windowLen).as("w2"))
-      .agg(collect_list(struct(col("__cat"), col("n"))).as("types"))
+    def out(in: String): DataFrame = {
+      val raw = spark.readStream.schema(schema).parquet(in)
+      val src = raw.withColumn("__evt", eventTs(raw, "ts"))
+        .withWatermark("__evt", watermark)
+        .filter(col(catCol).isNotNull)
+      val counts = src
+        .groupBy(window(col("__evt"), windowLen).as("w"),
+          col(catCol).cast("string").as("__cat"))
+        .agg(count(lit(1)).as("n"))
+      val perWindow = counts
+        .groupBy(window(window_time(col("w")), windowLen).as("w2"))
+        .agg(collect_list(struct(col("__cat"), col("n"))).as("types"))
 
-    val keptLit = array(kept.map { case (c, nb) =>
-      struct(lit(c).as("category"), lit(nb).as("n_base")) }: _*)
-    val withTerms = perWindow
-      .select(unix_timestamp(col("w2.start")).as("window_start"), col("types"))
-      .withColumn("window_total",
-        aggregate(col("types"), lit(0L), (a, t) => a + t.getField("n")))
-      .withColumn("terms", transform(keptLit, k => struct(
-        k.getField("category").as("category"),
-        k.getField("n_base").as("n_base"),
-        aggregate(filter(col("types"),
-            t => t.getField("__cat") === k.getField("category")),
-          lit(0L), (a, t) => a + t.getField("n")).as("n_cur"))))
-      .withColumn("__nck",
-        aggregate(col("terms"), lit(0L), (a, x) => a + x.getField("n_cur")))
-      .withColumn("terms",
-        when(lit(nbOther) > 0L || col("window_total") - col("__nck") > 0L,
-          concat(col("terms"), array(struct(
-            lit("__other__").as("category"), lit(nbOther).as("n_base"),
-            (col("window_total") - col("__nck")).as("n_cur")))))
-          .otherwise(col("terms")))
-    val pb = col("n_base") / lit(tb)
-    val pc = col("n_cur") / col("window_total")
-    val m = (pb + pc) / 2
-    val term = (when(col("n_base") === 0L, lit(0.0)).otherwise(pb * log(pb / m))
-      + when(col("n_cur") === 0L, lit(0.0)).otherwise(pc * log(pc / m))) * 0.5
-    val out = withTerms
-      .select(col("window_start"), col("window_total"),
-        explode(col("terms")).as("t"))
-      .select(col("window_start"), col("t.category").as("category"),
-        col("t.n_base").as("n_base"), col("t.n_cur").as("n_cur"),
-        col("window_total"))
-      .select(col("window_start"), col("category"), col("n_base"),
-        col("n_cur"), col("window_total"),
-        round(pb, 6).as("p_base"), round(pc, 6).as("p_cur"),
-        round(term, 6).as("jsd_term"))
+      val keptLit = array(kept.map { case (c, nb) =>
+        struct(lit(c).as("category"), lit(nb).as("n_base")) }: _*)
+      val withTerms = perWindow
+        .select(unix_timestamp(col("w2.start")).as("window_start"), col("types"))
+        .withColumn("window_total",
+          aggregate(col("types"), lit(0L), (a, t) => a + t.getField("n")))
+        .withColumn("terms", transform(keptLit, k => struct(
+          k.getField("category").as("category"),
+          k.getField("n_base").as("n_base"),
+          aggregate(filter(col("types"),
+              t => t.getField("__cat") === k.getField("category")),
+            lit(0L), (a, t) => a + t.getField("n")).as("n_cur"))))
+        .withColumn("__nck",
+          aggregate(col("terms"), lit(0L), (a, x) => a + x.getField("n_cur")))
+        .withColumn("terms",
+          when(lit(nbOther) > 0L || col("window_total") - col("__nck") > 0L,
+            concat(col("terms"), array(struct(
+              lit("__other__").as("category"), lit(nbOther).as("n_base"),
+              (col("window_total") - col("__nck")).as("n_cur")))))
+            .otherwise(col("terms")))
+      val pb = col("n_base") / lit(tb)
+      val pc = col("n_cur") / col("window_total")
+      val m = (pb + pc) / 2
+      val term = (when(col("n_base") === 0L, lit(0.0)).otherwise(pb * log(pb / m))
+        + when(col("n_cur") === 0L, lit(0.0)).otherwise(pc * log(pc / m))) * 0.5
+      withTerms
+        .select(col("window_start"), col("window_total"),
+          explode(col("terms")).as("t"))
+        .select(col("window_start"), col("t.category").as("category"),
+          col("t.n_base").as("n_base"), col("t.n_cur").as("n_cur"),
+          col("window_total"))
+        .select(col("window_start"), col("category"), col("n_base"),
+          col("n_cur"), col("window_total"),
+          round(pb, 6).as("p_base"), round(pc, 6).as("p_cur"),
+          round(term, 6).as("jsd_term"))
+    }
     withBackfillStatePartitions(spark) {
-      runGate(out.writeStream.format("memory").queryName(qn)
+      runGate(spark, sourcePath)(out(_).writeStream.format("memory").queryName(qn)
         .outputMode("append").trigger(Trigger.AvailableNow())) { q =>
         q.awaitTermination()
         val plan = org.apache.spark.sql.graftbridge.Bridge
@@ -858,24 +872,20 @@ object Streams {
                       watermark: String = "2 hours",
                       stateStore: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val schema = spark.read.parquet(sourcePath).schema
-    val srcFile = new java.io.File(sourcePath)
-    require(srcFile.isFile, s"dedupStreamOnce expects a parquet file, got $sourcePath")
-    val d = java.nio.file.Files.createTempDirectory("graft_stream_redeliver")
-    Seq("delivery1.parquet", "delivery2.parquet").foreach { n =>
-      java.nio.file.Files.createSymbolicLink(
-        d.resolve(n), srcFile.toPath.toAbsolutePath)
-    }
-    val raw = spark.readStream.schema(schema).parquet(d.toString)
-    val ev = raw
-      .withColumn("__ts_t", eventTs(raw, "ts"))
-      .withWatermark("__ts_t", watermark)
-      .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
+    require(new java.io.File(sourcePath).isFile,
+      s"dedupStreamOnce expects a parquet file, got $sourcePath")
+    val schema = Tables.parquet(spark, sourcePath).schema
     val qn = "graft_dedup_" + java.util.UUID.randomUUID().toString.replace("-", "")
     withSessionConf(spark, "spark.sql.streaming.stateStore.providerClass", stateStore) {
       withBackfillStatePartitions(spark) {
-        runGate(ev.writeStream.format("memory").queryName(qn)
-          .outputMode("append").trigger(Trigger.AvailableNow())) { q =>
+        runGate(spark, sourcePath, deliveries = 2) { in =>
+          val raw = spark.readStream.schema(schema).parquet(in)
+          raw.withColumn("__ts_t", eventTs(raw, "ts"))
+            .withWatermark("__ts_t", watermark)
+            .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
+            .writeStream.format("memory").queryName(qn)
+            .outputMode("append").trigger(Trigger.AvailableNow())
+        } { q =>
           q.awaitTermination()
           // the requested provider must have actually RUN, not been
           // silently ignored: RocksDB surfaces its own custom state
@@ -934,28 +944,25 @@ object Streams {
                           textCol: String = "text", shingleN: Int = 5,
                           watermark: String = "2 hours"): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val schema = spark.read.parquet(sourcePath).schema
-    val srcFile = new java.io.File(sourcePath)
-    require(srcFile.isFile, s"nearDedupStreamOnce expects a parquet file, got $sourcePath")
-    val d = java.nio.file.Files.createTempDirectory("graft_stream_neardedup")
-    Seq("delivery1.parquet", "delivery2.parquet").foreach { n =>
-      java.nio.file.Files.createSymbolicLink(
-        d.resolve(n), srcFile.toPath.toAbsolutePath)
-    }
-    // null-text rows drop from the dedup stream rather than silently
-    // merging: their content signature is null (the exact-dedup null
-    // convention) and dropDuplicates groups nulls TOGETHER — callers
-    // route null-text rows separately
-    val ev = spark.readStream.schema(schema).parquet(d.toString)
-      .filter(col(textCol).isNotNull)
-      .withColumn("__sig", graft.dedup.Dedup.contentSignature(col(textCol), shingleN))
-      .withColumn("__ingest_ts", current_timestamp())
-      .withWatermark("__ingest_ts", watermark)
-      .dropDuplicatesWithinWatermark("__sig")
+    require(new java.io.File(sourcePath).isFile,
+      s"nearDedupStreamOnce expects a parquet file, got $sourcePath")
+    val schema = Tables.parquet(spark, sourcePath).schema
     val qn = "graft_neardedup_" + java.util.UUID.randomUUID().toString.replace("-", "")
     withBackfillStatePartitions(spark) {
-      runGate(ev.writeStream.format("memory").queryName(qn)
-        .outputMode("append").trigger(Trigger.AvailableNow()))(_.awaitTermination())
+      runGate(spark, sourcePath, deliveries = 2) { in =>
+        // null-text rows drop from the dedup stream rather than silently
+        // merging: their content signature is null (the exact-dedup null
+        // convention) and dropDuplicates groups nulls TOGETHER — callers
+        // route null-text rows separately
+        spark.readStream.schema(schema).parquet(in)
+          .filter(col(textCol).isNotNull)
+          .withColumn("__sig", graft.dedup.Dedup.contentSignature(col(textCol), shingleN))
+          .withColumn("__ingest_ts", current_timestamp())
+          .withWatermark("__ingest_ts", watermark)
+          .dropDuplicatesWithinWatermark("__sig")
+          .writeStream.format("memory").queryName(qn)
+          .outputMode("append").trigger(Trigger.AvailableNow())
+      }(_.awaitTermination())
     }
     detachedTable(spark, qn)
   }

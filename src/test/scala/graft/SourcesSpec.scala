@@ -242,4 +242,125 @@ class SourcesSpec extends AnyFunSuite {
     ).collect()(0).getLong(0)
     assert(n > 0)
   }
+
+  /** Spark jobs started while `body` runs. Listener events arrive in
+    * order on the bus, so once a marked sentinel job's start has been
+    * seen, every earlier job start has been counted. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.sentinel") != null))
+          drained.countDown()
+        else started.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setLocalProperty("graft.sentinel", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.sentinel", null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      started.get()
+    } finally sc.removeSparkListener(l)
+  }
+
+  private def path(name: String) = s"${SparkT.sfDir}/$name.parquet"
+
+  test("parquet schema memo: a warm read of an unchanged table starts no job") {
+    Tables.load(spark, SparkT.sfDir, "lineitem").schema
+    assert(jobsStartedBy(Tables.load(spark, SparkT.sfDir, "lineitem").schema) == 0)
+    // the control: the plain read infers with a job on every call
+    assert(jobsStartedBy(spark.read.parquet(path("lineitem")).schema) >= 1)
+  }
+
+  test("parquet schema memo: memoized schema equals the inferred one on every table") {
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.output.map(a => (a.name, a.dataType, a.nullable))
+    Tables.allTables.foreach { t =>
+      val inferred = spark.read.parquet(path(t))
+      Tables.load(spark, SparkT.sfDir, t)
+      val warm = Tables.load(spark, SparkT.sfDir, t)
+      assert(warm.schema == inferred.schema, t)
+      assert(shape(warm) == shape(inferred), t)
+    }
+  }
+
+  test("parquet schema memo: a self-join of two loads keeps fresh attribute ids") {
+    def pairs(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+      a.join(b, a("o_custkey") === b("o_custkey") && a("o_orderkey") < b("o_orderkey"))
+        .select(a("o_orderkey").as("x"), b("o_orderkey").as("y"))
+    val (a, b) = (Tables.load(spark, SparkT.sfDir, "orders"),
+      Tables.load(spark, SparkT.sfDir, "orders"))
+    val ids = (df: org.apache.spark.sql.DataFrame) =>
+      df.queryExecution.analyzed.output.map(_.exprId).toSet
+    assert((ids(a) & ids(b)).isEmpty)
+    val got = pairs(a, b)
+    val want = pairs(spark.read.parquet(path("orders")), spark.read.parquet(path("orders")))
+    assert(got.count() > 0)
+    assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0)
+  }
+
+  test("parquet schema memo: an overwritten path is re-inferred on the next read") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_memo").toString
+    // a directory of part files
+    Seq(1, 2).toDF("a").write.mode("overwrite").parquet(s"$dir/t")
+    Tables.parquet(spark, s"$dir/t"); Tables.parquet(spark, s"$dir/t")
+    Seq("x").toDF("b").write.mode("overwrite").parquet(s"$dir/t")
+    val back = Tables.parquet(spark, s"$dir/t")
+    assert(back.columns.toSeq == Seq("b"))
+    assert(back.as[String].collect().toSeq == Seq("x"))
+    // a single file replaced in place
+    def part(d: String) = new java.io.File(d).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.toPath
+    val file = java.nio.file.Paths.get(s"$dir/one.parquet")
+    Seq(1L).toDF("a").coalesce(1).write.parquet(s"$dir/p1")
+    Seq(2.5).toDF("c").coalesce(1).write.parquet(s"$dir/p2")
+    Files.copy(part(s"$dir/p1"), file)
+    Tables.parquet(spark, file.toString); Tables.parquet(spark, file.toString)
+    Files.copy(part(s"$dir/p2"), file, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    assert(Tables.parquet(spark, file.toString).columns.toSeq == Seq("c"))
+  }
+
+  test("parquet schema memo: changing spark.sql.parquet.binaryAsString re-infers") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    // written without Spark's schema metadata (which would pin the
+    // type): a bare BINARY column is exactly what the conf governs
+    val file = Files.createTempDirectory("graft_memo_bin").toString + "/b.parquet"
+    val schema = MessageTypeParser.parseMessageType("message m { required binary b; }")
+    val w = ExampleParquetWriter.builder(org.apache.parquet.hadoop.util.HadoopOutputFile
+        .fromPath(new org.apache.hadoop.fs.Path(file), spark.sparkContext.hadoopConfiguration))
+      .withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("b", "hi")) finally w.close()
+    val key = "spark.sql.parquet.binaryAsString"
+    val prev = spark.conf.getOption(key)
+    def bType = Tables.parquet(spark, file).schema("b").dataType
+    try {
+      spark.conf.set(key, "false")
+      assert(bType == BinaryType); assert(bType == BinaryType)
+      spark.conf.set(key, "true")
+      assert(bType == StringType)
+      assert(Tables.parquet(spark, file).collect().head.getString(0) == "hi")
+      spark.conf.set(key, "false")
+      assert(bType == BinaryType)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("parquet schema memo: a partitioned directory is never memoized") {
+    val dir = Files.createTempDirectory("graft_memo_part").toString + "/p"
+    Tables.writePartitioned(SparkT.table("nation").select("n_nationkey", "n_regionkey"),
+      dir, Seq("n_regionkey"))
+    Tables.parquet(spark, dir)
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(jobsStartedBy { df = Tables.parquet(spark, dir) } >= 1)
+    assert(df.columns.toSeq == Seq("n_nationkey", "n_regionkey"))
+    assert(df.filter(col("n_regionkey") === 1).count() ==
+      SparkT.table("nation").filter(col("n_regionkey") === 1).count())
+  }
 }

@@ -470,4 +470,33 @@ class StreamsSpec extends AnyFunSuite {
       rm(tmp)
     }
   }
+
+  test("a gate runs on the session it is given, with no active or default session") {
+    import org.apache.spark.sql.SparkSession
+    val events = s"${SparkT.sfDir}/events.parquet"
+    val batch = Streams.tumblingAgg(SparkT.table("events"), "1 hour")
+    val (active, default) = (SparkSession.getActiveSession, SparkSession.getDefaultSession)
+    try {
+      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+      assert(scala.util.Try(SparkSession.active).isFailure)
+      val got = Streams.tumblingAggStreamOnce(spark, events, "1 hour")
+      assert(got.exceptAll(batch).count() == 0 && batch.exceptAll(got).count() == 0)
+    } finally {
+      default.foreach(SparkSession.setDefaultSession)
+      active.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("a gate over a parquet FILE removes its temp input dir when it ends") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def inputDirs() = Option(tmp.list()).toSeq.flatten.count(_.startsWith("graft_stream_src"))
+    val events = new java.io.File(s"${SparkT.sfDir}/events.parquet")
+    assert(events.isFile) // the case that needs a wrapper dir
+    val before = inputDirs()
+    Streams.tumblingAggStreamOnce(spark, events.getPath, "1 hour").count()
+    Streams.dedupStreamOnce(spark, events.getPath, keyCols = Seq("event_id")).count()
+    assert(inputDirs() == before)
+    // the symlinks went, not what they point at
+    assert(events.isFile)
+  }
 }
