@@ -1,29 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.api.GraftSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // FULL config parity with GraftSession.local — AQE, UTC session
-    // timezone, and the graft extensions (optimizer rule + native
-    // strategies): the benchmark must measure the engine configuration
-    // production sessions (and the correctness gate) actually run, or
-    // timestamp bucketing could group differently than the verified
-    // results and plans would be timed without the extension rules
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.expressions.GraftFunctions.register(spark)
+    // the engine configuration production sessions and the
+    // correctness gate run: the benchmark must time the same AQE,
+    // UTC-timezone and extension-rule setup as the verified results
+    val spark = GraftSession.local(appName = "graft-bench")
     // JIT/codegen framework warmup so the first timed query doesn't
     // absorb session initialization cost
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(100).count()

@@ -1,11 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import graft.api.GraftSession
 
 /** Driver-contract correctness dump: every `SparkEntry.queries` result
   * to `outDir/<name>/` parquet plus the oracle SQL as
-  * `outDir/oracle_sql.json` (the driver replays it in DuckDB).
+  * `outDir/oracle_sql.json` (`tools/oracle_check.py` replays it in
+  * DuckDB), under the same `GraftSession.local` configuration Bench
+  * and the tools use.
   * [[graft.tools.QuickVerify]] runs the same core on a subset. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -13,29 +15,9 @@ object Verify {
     run(sfDir, outDir, SparkEntry.queries.keySet, verbose = false)
   }
 
-  /** The session the correctness gate runs under — shared with the
-    * subset tool so a config added here cannot silently diverge from
-    * the full run. */
-  private[graft] def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // graft extensions included: the gate verifies the same engine
-    // configuration (optimizer rule + native strategies) production
-    // sessions run
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-  }
-
   private[graft] def run(sfDir: String, outDir: String,
                          names: Set[String], verbose: Boolean): Unit = {
-    val spark = session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(q => names.contains(q._1)).foreach { case (name, fn) =>
       val t0 = System.nanoTime()

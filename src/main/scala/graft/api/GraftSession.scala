@@ -14,11 +14,13 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Build a tuned local session. `cores` drives shuffle parallelism so
-    * local runs don't pay 200-partition overhead; on a real cluster the
-    * same builder is used with AQE coalescing partitions at runtime.
+  /** Build a tuned local session — the one session builder every graft
+    * main (Verify, Bench, the tools) and the test suite run under.
+    * `cores` drives shuffle parallelism so local runs don't pay
+    * 200-partition overhead; on a real cluster the same builder is used
+    * with AQE coalescing partitions at runtime.
     */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors(),
+  def local(cores: Int = defaultCores,
             appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
@@ -33,7 +35,6 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.expressions.GraftFunctions.register(spark)
     // getOrCreate may have returned a PRE-EXISTING session built
     // without graft's extensions — withExtensions only applies at
     // creation time, so the native strategies (as-of join) and the
@@ -49,9 +50,16 @@ object GraftSession {
     spark
   }
 
+  /** Core count for [[local]]: `SPARK_GRAFT_CPUS` when set, else the
+    * JVM's available processors. */
+  private def defaultCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+
   /** Register graft SQL functions + optimizer rules on an externally
     * built session (extensions can't be injected post-creation, but
-    * `experimental.extraOptimizations` can). */
+    * `experimental.extraOptimizations` can). Leaves the session's
+    * configuration — its time zone included — as it is. */
   def init(spark: SparkSession): SparkSession = {
     graft.expressions.GraftFunctions.register(spark)
     val exp = org.apache.spark.sql.graftbridge.Bridge.experimental(spark)

@@ -33,9 +33,9 @@ object SimplifyGraftExpressions extends Rule[LogicalPlan] {
     }
 }
 
-/** Session extension entry point:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`.
+/** Session extension entry point: a session builder's
+  * `.withExtensions(new GraftExtensions)` (as `GraftSession.local` does)
+  * or `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

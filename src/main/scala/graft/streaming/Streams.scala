@@ -32,9 +32,10 @@ object Streams {
     * storage type's conversion.
     *
     * @note the NTZ arm is instant-preserving ONLY under a UTC session
-    *       (`spark.sql.session.timeZone=UTC`, which [[graft.api.GraftSession]]
-    *       always pins). A pre-built non-UTC session would silently
-    *       shift NTZ event times, so that arm `require`s UTC.
+    *       (`spark.sql.session.timeZone=UTC`, which `GraftSession.local`
+    *       pins and `GraftSession.init` leaves alone). A pre-built
+    *       non-UTC session would silently shift NTZ event times, so
+    *       that arm `require`s UTC.
     */
   def eventTs(events: DataFrame, tsCol: String): Column =
     events.schema(tsCol).dataType match {
@@ -47,7 +48,7 @@ object Streams {
         timestamp_micros(expr(s"($tsCol - pmod($tsCol, 1000)) div 1000"))
       case TimestampType => col(tsCol)
       // NTZ → TIMESTAMP is instant-preserving under the UTC session
-      // the library always runs with (GraftSession pins UTC); on a
+      // the library always runs with (GraftSession.local pins UTC); on a
       // pre-built non-UTC session the cast would silently SHIFT event
       // times — fail loudly instead. Read the conf WITHOUT a default
       // (the entry always resolves — passing a default would make
@@ -62,7 +63,8 @@ object Streams {
         require(isUtc,
           s"eventTs($tsCol): TIMESTAMP_NTZ → TIMESTAMP is instant-preserving " +
             s"only under a UTC session, but spark.sql.session.timeZone=$tz. " +
-            "Use GraftSession.init (pins UTC) or set the session timezone to UTC.")
+            "Build the session with GraftSession.local (which pins UTC) or set " +
+            "spark.sql.session.timeZone=UTC.")
         col(tsCol).cast(TimestampType)
       case _ => col(tsCol).cast("timestamp")
     }

@@ -21,7 +21,7 @@ import graft.api.GraftSession
   *     volume and distinct-key counts grow K-fold.
   *   - documents: doc_id shifted; copy i>0 additionally remaps every
   *     word through a rotation of the corpus vocabulary (word w ->
-  *     vocab[(idx(w) + i*17) mod V]). Within-copy shingle/dup
+  *     vocab[(idx(w) + vocabShift(i)) mod V]). Within-copy shingle/dup
   *     structure is preserved exactly; across copies no shingle
   *     matches, so the dedup self-joins don't see a K^2 blowup of
   *     artificial exact duplicates that real corpus growth would not
@@ -38,12 +38,22 @@ import graft.api.GraftSession
 object GenScale {
   private val Shift = 10000000L
 
+  /** Vocabulary rotation for document copy `i` of `k` over a vocabulary
+    * of `n` words: `i` itself, so every copy 1..k−1 gets a non-zero
+    * rotation distinct from every other copy's. A stride such as
+    * `i * 17` is the identity whenever `n` divides it, which would make
+    * that copy's text an exact duplicate of copy 0. */
+  private[graft] def vocabShift(i: Int, n: Int, k: Int): Int = {
+    require(n > k, s"vocabulary of $n words cannot give $k copies distinct rotations")
+    require(i >= 1 && i < k, s"copy $i has no rotation (copies 1..${k - 1} do)")
+    i
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: GenScale <srcDir> <destDir> [copies]")
     val src = args(0); val dest = args(1)
     val k = if (args.length > 2) args(2).toInt else 10
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-genscale")
+    val spark = GraftSession.local(appName = "graft-genscale")
     import spark.implicits._
 
     def rd(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
@@ -75,8 +85,9 @@ object GenScale {
     val docCopies = (0 until k).map { i =>
       if (i == 0) docs
       else {
+        val shift = vocabShift(i, n, k)
         val rot: Map[String, String] =
-          vocab.map(w => w -> vocab((vIdx(w) + i * 17) % n)).toMap
+          vocab.map(w => w -> vocab((vIdx(w) + shift) % n)).toMap
         val rotB = spark.sparkContext.broadcast(rot)
         val remap = udf((t: String) =>
           if (t == null) null

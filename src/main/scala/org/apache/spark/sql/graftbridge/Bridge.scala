@@ -36,6 +36,13 @@ object Bridge {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
+  /** Block until every listener event posted so far has been delivered
+    * — listener calls are asynchronous, so a caller that reads what a
+    * `SparkListener` recorded for a finished action drains first. The
+    * bus is `private[spark]`, hence this package. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(60000L)
+
   /** Executed physical plan of a StreamingQuery's LAST micro-batch —
     * Connect-era Spark wraps the execution behind `private[sql]`
     * `StreamingQueryWrapper`; gates use this to assert the engine

@@ -37,7 +37,7 @@ class SourcesSpec extends AnyFunSuite {
   test("bucketed tables join without any exchange") {
     // a managed table's location survives the (in-memory) catalog across
     // JVMs — drop both the entry and any stale directory first
-    Seq("orders_b", "lineitem_b").foreach { t =>
+    Seq("orders_b", "lineitem_b", "orders_b4").foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
       val loc = new java.io.File(s"spark-warehouse/$t")
       if (loc.exists()) {
@@ -65,7 +65,16 @@ class SourcesSpec extends AnyFunSuite {
       // AQE renders initial+final plans, so each side's bucketed scan
       // can appear twice — require at least both sides once
       assert("Bucketed: true".r.findAllIn(p).length >= 2, p.take(1200))
-      assert(j.count() == SparkT.table("lineitem").count())
+      val plain = SparkT.table("lineitem")
+        .join(SparkT.table("orders"), col("l_orderkey") === col("o_orderkey")).count()
+      assert(j.count() == plain)
+      // overwriting an existing bucketed table replaces it in place
+      Tables.writeBucketed(SparkT.table("orders"), "orders_b", "o_orderkey", 8)
+      assert(spark.table("orders_b").count() == SparkT.table("orders").count())
+      // mismatched bucket counts: one side must shuffle, rows unchanged
+      Tables.writeBucketed(SparkT.table("orders"), "orders_b4", "o_orderkey", 4)
+      assert(spark.table("lineitem_b").join(spark.table("orders_b4"), "o_orderkey")
+        .count() == plain)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 

@@ -499,4 +499,23 @@ class StreamsSpec extends AnyFunSuite {
     // the symlinks went, not what they point at
     assert(events.isFile)
   }
+
+  test("eventTs on a TIMESTAMP_NTZ column under a non-UTC session names the real fix") {
+    import spark.implicits._
+    val ntz = Seq(java.time.LocalDateTime.of(2024, 1, 1, 12, 0)).toDF("ts")
+    assert(ntz.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType)
+    val key = "spark.sql.session.timeZone"
+    val prev = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "America/New_York")
+      val e = intercept[IllegalArgumentException](Streams.eventTs(ntz, "ts"))
+      assert(e.getMessage.contains("GraftSession.local"), e.getMessage)
+      assert(e.getMessage.contains("spark.sql.session.timeZone=UTC"), e.getMessage)
+      // init registers functions and rules but sets no time zone
+      assert(!e.getMessage.contains("GraftSession.init"), e.getMessage)
+      spark.conf.set(key, "Etc/UTC")
+      assert(ntz.select(unix_timestamp(Streams.eventTs(ntz, "ts"))).head().getLong(0) ==
+        java.time.LocalDateTime.of(2024, 1, 1, 12, 0).toEpochSecond(java.time.ZoneOffset.UTC))
+    } finally spark.conf.set(key, prev)
+  }
 }
